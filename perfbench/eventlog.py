@@ -32,21 +32,9 @@ COUNTERS = (
 
 
 def _log_files(log_dir: str) -> list[str]:
-    """Event-log files under ``log_dir``: a plain log, or the ``events_<n>_``
-    parts of a rolling (v2) log in index order."""
-    out = []
-    for root, _dirs, files in os.walk(log_dir):
-        for f in files:
-            if f.startswith(("appstatus", ".")) or f.endswith(".crc"):
-                continue
-            out.append(os.path.join(root, f))
-
-    def order(path: str):
-        name = os.path.basename(path)
-        parts = name.split("_")
-        return (int(parts[1]) if name.startswith("events_") and parts[1].isdigit() else 0, name)
-
-    return sorted(out, key=order)
+    """The event-log files under ``log_dir``."""
+    return sorted(os.path.join(root, f) for root, _dirs, files in os.walk(log_dir)
+                  for f in files if not f.startswith(".") and not f.endswith(".crc"))
 
 
 def read_groups(log_dir: str) -> dict[str, dict[str, float]]:

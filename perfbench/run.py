@@ -16,7 +16,8 @@ event log and JVM/``/proc`` polling, prints a per-layer table and reports
 the per-layer metrics instead. Everything the run writes goes under
 ``.bench_work/`` in the checkout and is removed at the end, except
 ``.bench_work/history.jsonl``, which lets a traced run report its overhead
-against earlier untraced runs of the same workload. See perfbench/README.md.
+against earlier untraced runs of the same workload and code. See
+perfbench/README.md.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ T_START = time.perf_counter()
 
 import argparse  # noqa: E402
 import contextlib  # noqa: E402
+import hashlib  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import shlex  # noqa: E402
@@ -47,6 +49,9 @@ CORES = 4                 # local[4]
 DRIVER_MEM = "1g"
 WARMUP_REPS = 1
 MAX_TIMED_REPS = 8
+# a traced run times at least two reps made the same way, so that
+# repeat_checks has a pair to compare
+MIN_TRACED_REPS = 2
 DEADLINE_S = 170          # a run must end within 180 s
 
 MB = 2**20
@@ -228,7 +233,9 @@ def run(args, work: str, workload_cls, bench_dir: str) -> dict:
             while True:
                 one_rep(warmup=False)
                 n_timed = len(reps) - WARMUP_REPS
-                if time.perf_counter() - t_timed >= args.seconds or n_timed >= MAX_TIMED_REPS:
+                done = (time.perf_counter() - t_timed >= args.seconds
+                        and n_timed >= (MIN_TRACED_REPS if trace else 1))
+                if done or n_timed >= MAX_TIMED_REPS:
                     break
     except Exception as exc:   # report the failure as a failed operation
         traceback.print_exc()
@@ -260,12 +267,12 @@ def run(args, work: str, workload_cls, bench_dir: str) -> dict:
     if trace:
         metrics = per_layer(reps, tracer.spans, resumed)
         metrics.update({f"setup.{k}": {"value": v, "unit": "s"} for k, v in setup.items()})
-        print_table(wl.name, metrics, _history_wall(bench_dir, wl.name))
+        print_table(wl.name, metrics, _history_wall(bench_dir, wl.name, code_key()))
     else:
         metrics = end_to_end(timed_reps, t_timed, peak_rss)
         if not failed:
             with open(os.path.join(bench_dir, "history.jsonl"), "a") as f:
-                f.write(json.dumps({"workload": wl.name, "seed": args.seed,
+                f.write(json.dumps({"workload": wl.name, "code": code_key(), "seed": args.seed,
                                     "wall_s": metrics["wall_s"]["value"]}) + "\n")
     return {"correct": failed == 0, "attempted": max(len(checks), 1),
             "failed": failed, "metrics": metrics}
@@ -298,7 +305,9 @@ def _pinned(name):
 def _observed(rep: dict) -> dict:
     keys = ("edge_rows", "labels", "modularity", "passes", "pagerank_sum",
             "components", "lpa_labels", "triangles")
-    return {k: rep[k] for k in keys if k in rep}
+    out = {k: rep[k] for k in keys if k in rep}
+    out["move_rounds"] = rep["phases"]["move_rounds"]
+    return out
 
 
 def _span_sum(spans, rep_no: int, layer: str, key: str = "wall_s") -> float:
@@ -405,10 +414,26 @@ def per_layer(reps, spans, resumed) -> dict:
     return out
 
 
-def _history_wall(bench_dir, name):
+def code_key() -> str:
+    """md5 over the engine's and the benchmark's Python sources, so a traced
+    run compares itself only with untraced runs of the same code."""
+    h = hashlib.md5()
+    for top in (os.path.join(ROOT, PACKAGE), HERE):
+        for root, dirs, files in os.walk(top):
+            dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+            for f in sorted(f for f in files if f.endswith(".py")):
+                path = os.path.join(root, f)
+                h.update(os.path.relpath(path, ROOT).encode())
+                with open(path, "rb") as fh:
+                    h.update(fh.read())
+    return h.hexdigest()
+
+
+def _history_wall(bench_dir, name, code):
     try:
         with open(os.path.join(bench_dir, "history.jsonl")) as f:
-            walls = [rec["wall_s"] for rec in map(json.loads, f) if rec["workload"] == name]
+            walls = [rec["wall_s"] for rec in map(json.loads, f)
+                     if rec["workload"] == name and rec.get("code") == code]
     except OSError:
         return None
     return median(walls) if walls else None
@@ -423,7 +448,8 @@ def print_table(name, metrics, untraced_wall):
         print(f"  tracing overhead: traced rep wall {traced:.3f} s vs untraced median "
               f"{untraced_wall:.3f} s ({100 * (traced / untraced_wall - 1):+.1f}%)")
     else:
-        print("  tracing overhead: no untraced run of this workload in .bench_work/history.jsonl")
+        print("  tracing overhead: no untraced run of this workload and code "
+              "in .bench_work/history.jsonl")
 
 
 if __name__ == "__main__":

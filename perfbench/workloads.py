@@ -23,10 +23,11 @@ from pyspark.sql import functions as F
 from leiden_communities_openmp_spark.operators.companions import (
     connected_components, label_propagation, pagerank, triangle_count,
 )
-from leiden_communities_openmp_spark.operators.graphgen import dense_steps
+from leiden_communities_openmp_spark.operators.graphgen import planted_hard
 from leiden_communities_openmp_spark.operators.kernel import LeidenOptions
 from leiden_communities_openmp_spark.operators.leiden import leiden_scale
 from leiden_communities_openmp_spark.plans.checkpoint import CheckpointManager
+from leiden_communities_openmp_spark.sources.edges import symmetricize_df
 from leiden_communities_openmp_spark.sources.fixtures import gen_pages
 from leiden_communities_openmp_spark.sources.pages import ingest
 
@@ -74,8 +75,12 @@ class Tracer:
 
 
 def _traced_checkpointer(root: str, tracer: Tracer) -> CheckpointManager:
+    """A checkpoint manager whose ``save``/``latest`` run in spans of their
+    own. ``ck.resumed_from`` lists the pass each ``latest`` call returned
+    (None when it found no committed pass)."""
     ck = CheckpointManager(root)
     save, latest = ck.save, ck.latest
+    ck.resumed_from = []
 
     def traced_save(*a, **kw):
         with tracer.span("ckpt.save"):
@@ -83,10 +88,20 @@ def _traced_checkpointer(root: str, tracer: Tracer) -> CheckpointManager:
 
     def traced_latest(*a, **kw):
         with tracer.span("ckpt.latest"):
-            return latest(*a, **kw)
+            got = latest(*a, **kw)
+        ck.resumed_from.append(None if got is None else got[0])
+        return got
 
     ck.save, ck.latest = traced_save, traced_latest
     return ck
+
+
+def committed_passes(root: str) -> list[int]:
+    """Passes under a checkpoint root that have a ``_COMMITTED`` marker."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(int(d[len("pass_"):]) for d in os.listdir(root)
+                  if d.startswith("pass_") and os.path.exists(os.path.join(root, d, "_COMMITTED")))
 
 
 def leiden_phases(metrics: list[dict]) -> dict[str, float]:
@@ -111,22 +126,6 @@ def leiden_phases(metrics: list[dict]) -> dict[str, float]:
             out["rows_out"] += hop.get("rows_out", 0)
             out["move_rounds"] += m.get("move_iterations", 0)
     return out
-
-
-def planted_edges(n: int) -> np.ndarray:
-    """The symmetric, deduplicated (src, dst) pairs of
-    ``graphgen.planted_hard(n)`` with its default ``intra``/``inter``, in
-    sorted order, computed with numpy on the driver."""
-    b = BLOCK
-    u = np.arange(n, dtype=np.int64)
-    j = u % b
-    dsts = [u - j + (j * a + c) % b for a, c in dense_steps(8)]
-    dsts += [(u - j + k * b + (u * 13 + k) % b) % n for k in range(1, 4)]
-    src = np.tile(u, len(dsts))
-    dst = np.concatenate(dsts)
-    keep = src != dst
-    return np.unique(np.stack([np.concatenate([src[keep], dst[keep]]),
-                               np.concatenate([dst[keep], src[keep]])], axis=1), axis=0)
 
 
 def seeded_ids(n: int, seed: int) -> np.ndarray:
@@ -159,9 +158,10 @@ def canonical_labels(membership, ids: np.ndarray | None = None) -> tuple[str, in
 
 
 class PlantedSweep:
-    """Leiden's sweep strategy on a planted-partition graph. The warm-up rep
-    checkpoints every super-step; after it a kill after pass 1 is simulated
-    and the run resumed. Timed reps run without a checkpointer."""
+    """Leiden's sweep strategy on a planted-partition graph: two distributed
+    sweep passes, then the driver kernel. The warm-up rep checkpoints every
+    sweep pass; after it a kill during pass 2 is simulated and the run
+    resumed from pass 1's checkpoint. Timed reps run without a checkpointer."""
 
     name = "planted_sweep"
     # counts that repeat exactly from rep to rep (see run.repeat_checks)
@@ -169,6 +169,13 @@ class PlantedSweep:
                  "shuffle_write_bytes")
     n = 6_400           # 25 blocks; sized so a run fits the per-run budget
     local_iters = 3     # move rounds per pass; each round is P Python tasks
+    # Pass 1 (6,400 vertices) and pass 2 (2,669) run as distributed sweeps;
+    # without a checkpointer pass 2 consumes pass 1's lazy multigraph handoff.
+    # The multigraph keeps all 138,200 edge rows, above driver_threshold, so
+    # the vertex count routes: the 528 vertices left after pass 2 are below
+    # driver_vertex_threshold and finish on the driver kernel.
+    driver_threshold = 50_000
+    driver_vertex_threshold = 1_000
 
     def __init__(self, spark, tracer: Tracer, seed: int, work_dir: str):
         self.spark, self.tracer, self.seed = spark, tracer, seed
@@ -177,8 +184,12 @@ class PlantedSweep:
         self.edge_rows = 0
 
     def build(self):
+        # the engine's own generator, symmetrized, in sorted order
+        t = symmetricize_df(planted_hard(self.spark, self.n)).select("src", "dst").toArrow()
+        pairs = np.stack([t.column("src").to_numpy(), t.column("dst").to_numpy()], axis=1)
+        pairs = pairs[np.lexsort((pairs[:, 1], pairs[:, 0]))]
         self.ids = seeded_ids(self.n, self.seed)
-        pairs = self.ids[planted_edges(self.n)]
+        pairs = self.ids[pairs]
         # the seed also shuffles the row order; the engine sorts what it needs
         pairs = pairs[np.random.default_rng(self.seed).permutation(len(pairs))]
         pdf = pd.DataFrame({"src": pairs[:, 0], "dst": pairs[:, 1], "w": np.ones(len(pairs))})
@@ -186,15 +197,12 @@ class PlantedSweep:
         self.edge_rows = len(pairs)
 
     def _leiden(self, checkpointer=None) -> dict:
-        # the driver-finish thresholds are scaled down to this graph, so that
-        # pass 1 runs as a distributed sweep and the coarsened graph finishes
-        # on the driver kernel, as on the engine's default thresholds at ~1M rows
         with self.tracer.span("leiden_scale"):
             res = leiden_scale(self.spark, self.edges, LeidenOptions(),
                                num_partitions=SWEEP_PARTITIONS,
                                local_iters=self.local_iters,
-                               driver_threshold=50_000,
-                               driver_vertex_threshold=self.n // 2,
+                               driver_threshold=self.driver_threshold,
+                               driver_vertex_threshold=self.driver_vertex_threshold,
                                checkpointer=checkpointer)
         digest, rows = canonical_labels(res.membership, self.ids)
         return {"edge_rows": self.edge_rows, "labels": digest, "label_rows": rows,
@@ -207,20 +215,29 @@ class PlantedSweep:
         shutil.rmtree(self.ckpt_dir, ignore_errors=True)
         obs = self._leiden(_traced_checkpointer(self.ckpt_dir, self.tracer))
         obs["ckpt_mb"] = _du_mb(self.ckpt_dir)
+        obs["committed"] = committed_passes(self.ckpt_dir)
         return obs
 
     def resume(self) -> dict:
-        """Kill after pass 1: drop the later commit markers, then resume
-        from the warm-up rep's checkpoints."""
-        for d in sorted(os.listdir(self.ckpt_dir))[1:]:
-            os.remove(os.path.join(self.ckpt_dir, d, "_COMMITTED"))
+        """Kill during pass 2: keep pass 1's commit marker, drop the later
+        ones, then resume from the warm-up rep's checkpoints."""
+        for p in committed_passes(self.ckpt_dir)[1:]:
+            os.remove(os.path.join(self.ckpt_dir, f"pass_{p:05d}", "_COMMITTED"))
+        ck = _traced_checkpointer(self.ckpt_dir, self.tracer)
         with self.tracer.span("resume"):
-            return self._leiden(_traced_checkpointer(self.ckpt_dir, self.tracer))
+            obs = self._leiden(ck)
+        obs["resumed_from"] = ck.resumed_from
+        return obs
 
     def checks(self, reps: list[dict], resumed: dict, pinned: dict | None) -> list[tuple[str, bool]]:
         out = [(f"labels of rep {r['rep']} equal the first rep's", r["labels"] == reps[0]["labels"]
                 and r["modularity"] == reps[0]["modularity"]) for r in reps]
         out.append(("every vertex labelled", all(r["label_rows"] == self.n for r in reps)))
+        committed = next(r["committed"] for r in reps if "committed" in r)
+        out.append((f"the checkpointed rep committed passes 1 and 2: {committed}",
+                    committed[:2] == [1, 2]))
+        out.append((f"the resume started from pass 1: {resumed['resumed_from']}",
+                    resumed["resumed_from"] == [1]))
         out.append(("resumed labels equal the uninterrupted run's",
                     resumed["labels"] == reps[0]["labels"]))
         out.append(("resumed modularity equals the uninterrupted run's",
@@ -229,6 +246,9 @@ class PlantedSweep:
             out.append(("edge rows", reps[0]["edge_rows"] == pinned["edge_rows"]))
             out.append(("label digest", reps[0]["labels"] == pinned["labels"]))
             out.append(("modularity", abs(reps[0]["modularity"] - pinned["modularity"]) <= 1e-6))
+            out += [(f"passes and move rounds of rep {r['rep']}",
+                     (r["passes"], r["phases"]["move_rounds"])
+                     == (pinned["passes"], pinned["move_rounds"])) for r in reps]
         return out
 
 
